@@ -4197,3 +4197,54 @@ def test_compact_batch_partitions_preserves_live_horizons(spark, tmp_path):
         assert view(folded, horizon) == view(plain, horizon), horizon
     # partition 5 kept its tag: horizon 6 sees it, horizon 5 does not
     assert len(view(folded, 6)) == len(view(folded, 5)) + 5
+
+
+def test_stream_rollup_timestamp_ntz_matches_epoch_millis(spark, tmp_path):
+    """A naive parquet timestamp (TIMESTAMP_NTZ) is read in the UTC session
+    zone, as load_table does on the batch path: stream_rollup commits the
+    same rows as for the same events written as epoch millis."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stamps = [
+        dt.datetime(2024, 6, 1, 11, 5, 10), dt.datetime(2024, 6, 1, 11, 5, 40),
+        dt.datetime(2024, 6, 1, 11, 6, 10), dt.datetime(2024, 6, 1, 12, 5, 10),
+        dt.datetime(2024, 6, 1, 14, 0, 0),  # advances the watermark
+    ]
+    pages = ["a", "a", "b", "a", "__flush"]
+    added = [1.0, 2.0, 3.0, 4.0, 0.0]
+    millis = [int(s.replace(tzinfo=dt.timezone.utc).timestamp() * 1000) for s in stamps]
+
+    def run(name, ts_array, ts_type):
+        src = tmp_path / name / "src"
+        src.mkdir(parents=True)
+        pq.write_table(
+            pa.table({"timestamp": ts_array, "page": pages, "added": added}),
+            str(src / "part-0.parquet"),
+        )
+        spec = IngestSpec(
+            datasource="wiki",
+            timestamp_spec=TimestampSpec(column="timestamp", format="millis", output="ts"),
+            dimensions_spec=DimensionsSpec(dimensions=["page"]),
+            metrics=(Count("n"), DoubleSum("added_sum", "added")),
+            granularity_spec=GranularitySpec("HOUR", "MINUTE"),
+        )
+        stream = spark.readStream.schema(
+            f"timestamp {ts_type}, page string, added double"
+        ).parquet(str(src))
+        sink = SegmentSink(str(tmp_path / name / "seg"), "wiki", "HOUR")
+        q = (
+            stream_rollup(stream, spec).writeStream.outputMode("append")
+            .foreachBatch(sink.foreach_batch())
+            .option("checkpointLocation", str(tmp_path / name / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return sorted(map(tuple, sink.read(spark, committed_only=True)
+                          .select("ts", "page", "n", "added_sum").collect()))
+
+    naive = run("ntz", pa.array(stamps, pa.timestamp("us")), "timestamp_ntz")
+    epoch = run("millis", pa.array(millis, pa.int64()), "bigint")
+    assert len(epoch) == 3
+    assert naive == epoch

@@ -860,6 +860,23 @@ def test_emb7_covariance_matches_numpy(spark, sf_dir):
         assert abs(cov - ref[i, j]) <= 2e-6, (i, j, cov, ref[i, j])
 
 
+def test_emb7_gram_fold_partials_keep_every_digit():
+    """A partial above 28 significant digits (Decimal's default context
+    precision, which ``scaleb`` rounds to) must reach the JVM exactly."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    from tranquility_spark.catalog_llm import _emb7_gram_fold
+
+    v = 10**17 + 1  # a 6dp-scaled value; v * v has 35 digits
+    batch = pa.RecordBatch.from_arrays([pa.array([v, v], pa.int64())], names=["v0"])
+    (out,) = list(_emb7_gram_fold(1)(iter([batch])))
+    assert out.column(0)[0].as_py() == 2
+    assert out.column(1)[0].as_py() == Decimal(f"{2 * v}e-6")
+    assert out.column(2)[0].as_py() == Decimal(f"{2 * v * v}e-12")
+
+
 def test_emb7_guards_null_and_short_embeddings(spark, tmp_path):
     """NULL embeddings are excluded (not silently half-counted); short
     arrays raise loudly (the binary_quantize guard rationale applied to

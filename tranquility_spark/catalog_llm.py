@@ -5706,37 +5706,41 @@ def _pipe8_decide(
         return df.localCheckpoint(eager=False)
 
     _pool = ThreadPoolExecutor(max_workers=len(fam_pairs))
-    _futs = {
-        fam: _pool.submit(_submit_ckpt, fam, df)
-        for fam, df in fam_pairs.items()
-    }
-    victims = {"exact": exact_victims}
-    _fam_order = list(fam_pairs)
-    fam_pairs = {}
-    for fam in _fam_order:
-        # resolve THIS gate's extraction only, inside the gate loop:
-        # later families' stages keep materializing in their pool
-        # threads while this gate's serial CC bookkeeping holds the
-        # driver — the back-fill §2.6 describes
-        pairs = _futs[fam].result()
-        fam_pairs[fam] = pairs
-        restricted = (
-            pairs.join(
-                cur.select(F.col("doc_id").alias("id_a")), "id_a", "left_semi"
+    try:
+        _futs = {
+            fam: _pool.submit(_submit_ckpt, fam, df)
+            for fam, df in fam_pairs.items()
+        }
+        victims = {"exact": exact_victims}
+        _fam_order = list(fam_pairs)
+        fam_pairs = {}
+        for fam in _fam_order:
+            # resolve THIS gate's extraction only, inside the gate loop:
+            # later families' stages keep materializing in their pool
+            # threads while this gate's serial CC bookkeeping holds the
+            # driver — the back-fill §2.6 describes
+            pairs = _futs[fam].result()
+            fam_pairs[fam] = pairs
+            restricted = (
+                pairs.join(
+                    cur.select(F.col("doc_id").alias("id_a")), "id_a", "left_semi"
+                )
+                .join(
+                    cur.select(F.col("doc_id").alias("id_b")), "id_b", "left_semi"
+                )
+                .localCheckpoint(eager=False)
             )
-            .join(
-                cur.select(F.col("doc_id").alias("id_b")), "id_b", "left_semi"
+            nxt = dd.neardup_survivors_converged(cur, restricted).localCheckpoint(
+                eager=False
             )
-            .localCheckpoint(eager=False)
-        )
-        nxt = dd.neardup_survivors_converged(cur, restricted).localCheckpoint(
-            eager=False
-        )
-        victims[fam] = cur.join(nxt, "doc_id", "left_anti").localCheckpoint(
-            eager=False
-        )
-        cur = nxt
-    _pool.shutdown(wait=True)
+            victims[fam] = cur.join(nxt, "doc_id", "left_anti").localCheckpoint(
+                eager=False
+            )
+            cur = nxt
+    finally:
+        # a raising gate must not leak the pool's threads or leave its
+        # queued checkpoints running (ADVICE r19)
+        _pool.shutdown(wait=True, cancel_futures=True)
     final = cur
     n_final = final.agg(F.count(F.lit(1)).alias("__nf"))
 
@@ -8707,11 +8711,42 @@ def emb7_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [f"p{i}_{j} decimal(38,12)" for i, j in pair_idx]
     )
 
+    partials = scaled.mapInArrow(_emb7_gram_fold(d), out_schema)
+    row = partials.selectExpr(
+        "coalesce(sum(n), CAST(0 AS BIGINT)) AS n",
+        *[f"sum(s{i}) AS s{i}" for i in range(d)],
+        *[f"sum(p{i}_{j}) AS p{i}_{j}" for i, j in pair_idx],
+    )
+    structs = ", ".join(
+        f"named_struct('dim_i', CAST({i} AS BIGINT),"
+        f" 'dim_j', CAST({j} AS BIGINT),"
+        f" 'cov', round(CAST(p{i}_{j} AS DOUBLE) / n"
+        f" - (CAST(s{i} AS DOUBLE) / n) * (CAST(s{j} AS DOUBLE) / n), 6))"
+        for i, j in pair_idx
+    )
+    return row.select(
+        F.expr(f"explode(array({structs}))").alias("e")
+    ).select("e.dim_i", "e.dim_j", "e.cov")
+
+
+def _emb7_gram_fold(d: int):
+    """emb7's per-partition ``mapInArrow`` fold over ``d`` scaled int64
+    columns: the row count, per-column sums as decimal(38,6) and
+    pair-product sums as decimal(38,12), all exact."""
+    pair_idx = [(i, j) for i in range(d) for j in range(i, d)]
+
     def _gram_fold(batches):
-        from decimal import Decimal
+        from decimal import Decimal, localcontext
 
         import numpy as np
         import pyarrow as pa
+
+        def _exact(acc: int, scale: int):
+            # acc x 10^-scale with every digit kept: scaleb rounds to the
+            # context precision (28 digits by default), and a
+            # decimal(38, *) partial needs up to 38 (ADVICE r19)
+            with localcontext(prec=39):
+                return Decimal(acc).scaleb(-scale)
 
         n_rows = 0
         s_acc = [0] * d
@@ -8774,7 +8809,7 @@ def emb7_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             arrays.append(
                 pa.array(
                     [
-                        Decimal(s_acc[i]).scaleb(-6)
+                        _exact(s_acc[i], 6)
                         if s_cnt[i] > 0
                         else None
                     ],
@@ -8785,7 +8820,7 @@ def emb7_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             arrays.append(
                 pa.array(
                     [
-                        Decimal(p_acc[ij]).scaleb(-12)
+                        _exact(p_acc[ij], 12)
                         if p_cnt[ij] > 0
                         else None
                     ],
@@ -8799,22 +8834,7 @@ def emb7_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    partials = scaled.mapInArrow(_gram_fold, out_schema)
-    row = partials.selectExpr(
-        "coalesce(sum(n), CAST(0 AS BIGINT)) AS n",
-        *[f"sum(s{i}) AS s{i}" for i in range(d)],
-        *[f"sum(p{i}_{j}) AS p{i}_{j}" for i, j in pair_idx],
-    )
-    structs = ", ".join(
-        f"named_struct('dim_i', CAST({i} AS BIGINT),"
-        f" 'dim_j', CAST({j} AS BIGINT),"
-        f" 'cov', round(CAST(p{i}_{j} AS DOUBLE) / n"
-        f" - (CAST(s{i} AS DOUBLE) / n) * (CAST(s{j} AS DOUBLE) / n), 6))"
-        for i, j in pair_idx
-    )
-    return row.select(
-        F.expr(f"explode(array({structs}))").alias("e")
-    ).select("e.dim_i", "e.dim_j", "e.cov")
+    return _gram_fold
 
 
 def _hh2_oracle_sql() -> str:

@@ -49,6 +49,29 @@ def window_period_seconds(period: str | int) -> int:
     return period if isinstance(period, int) else _parse_iso_duration_seconds(period)
 
 
+def window_condition(
+    ts: Column,
+    window_period: str | int = "PT10M",
+    now: _dt.datetime | str | None = None,
+    latest_close_time: _dt.datetime | str | None = None,
+) -> Column:
+    """``|ts − now| ≤ windowPeriod`` (and ``ts > latestCloseTime``) as a Column.
+
+    The one statement of the window rule: the filter below and the
+    Tranquilizer's per-event disposition both use it. ``now=None`` uses
+    ``current_timestamp()`` (true reference semantics: wall clock); pass a
+    fixed datetime for deterministic tests/oracles.
+    """
+    secs = window_period_seconds(window_period)
+    now_col: Column = F.current_timestamp() if now is None else F.lit(now).cast("timestamp")
+    cond = (ts >= now_col - F.expr(f"INTERVAL {secs} SECONDS")) & (
+        ts <= now_col + F.expr(f"INTERVAL {secs} SECONDS")
+    )
+    if latest_close_time is not None:
+        cond = cond & (ts > F.lit(latest_close_time).cast("timestamp"))
+    return cond
+
+
 def two_sided_window_filter(
     df: DataFrame,
     ts_col: str = "ts",
@@ -56,17 +79,5 @@ def two_sided_window_filter(
     now: _dt.datetime | str | None = None,
     latest_close_time: _dt.datetime | str | None = None,
 ) -> DataFrame:
-    """Keep rows with ``|ts − now| ≤ windowPeriod`` (and after latestCloseTime).
-
-    ``now=None`` uses ``current_timestamp()`` (true reference semantics:
-    wall clock); pass a fixed datetime for deterministic tests/oracles.
-    """
-    secs = window_period_seconds(window_period)
-    now_col: Column = F.current_timestamp() if now is None else F.lit(now).cast("timestamp")
-    ts = F.col(ts_col)
-    cond = (ts >= now_col - F.expr(f"INTERVAL {secs} SECONDS")) & (
-        ts <= now_col + F.expr(f"INTERVAL {secs} SECONDS")
-    )
-    if latest_close_time is not None:
-        cond = cond & (ts > F.lit(latest_close_time).cast("timestamp"))
-    return df.filter(cond)
+    """Keep rows with ``|ts − now| ≤ windowPeriod`` (and after latestCloseTime)."""
+    return df.filter(window_condition(F.col(ts_col), window_period, now, latest_close_time))

@@ -129,8 +129,13 @@ class TimestampSpec:
         src = df[self.column]
         dtype = dict(df.dtypes)[self.column]
         fmt = self.format.lower()
-        if dtype in ("timestamp", "timestamp_ntz"):
+        if dtype == "timestamp":
             return src
+        if dtype == "timestamp_ntz":
+            # a naive parquet timestamp: read it in the (UTC-pinned) session
+            # zone, as sources.files.load_table does — event-time operators
+            # (withWatermark, window) reject TIMESTAMP_NTZ
+            return src.cast("timestamp")
         # try_* variants: Druid drops rows with unparseable timestamps rather
         # than failing the ingest (and Spark 4 ANSI mode would throw otherwise)
         num = src.try_cast("long") if dtype == "string" else src.cast("long")

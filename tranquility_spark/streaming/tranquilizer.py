@@ -5,13 +5,14 @@ Reference: ``core/.../tranquilizer/Tranquilizer.scala`` (~400 LoC) — per-event
 bounded in-flight batches (``maxPendingBatches`` 5) and ``lingerMillis`` (0);
 dropped events resolve their future with ``MessageDroppedException``.
 
-Spark restatement: ``send`` buffers dict events; a flush builds ONE DataFrame
-for the batch, applies the ingest spec's timestamp extraction + window-period
-acceptance, and hands the survivors to a Beam (``SegmentSink.write_batch`` or
-``MemoryBeam``). Each event's future resolves True, or raises
-``MessageDroppedException`` if its timestamp was out of window / unparseable —
-per-event disposition is computed vectorized (one filter), never row-by-row in
-Python.
+Spark restatement: ``send`` buffers dict events; a flush builds ONE
+DataFrame for the batch — an Arrow-built local relation
+(``arrow_frame.events_frame``) — and derives one plan from it: the ingest
+spec's timestamp extraction plus an ``accepted`` flag (parseable and inside
+the window period). One driver-side collect of (index, parsed, accepted)
+resolves every event's future; the rows that plan accepts go to a Beam
+(``SegmentSink.write_batch`` or ``MemoryBeam``). Nothing is decided
+row-by-row in Python.
 
 Flushes are synchronous and deterministic (the default lingerMillis=0 was
 latency-biased anyway); ``maxPendingBatches`` back-pressure is therefore a
@@ -27,8 +28,9 @@ from typing import Callable, Optional
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from tranquility_spark.operators.window_filter import two_sided_window_filter
+from tranquility_spark.operators.window_filter import window_condition
 from tranquility_spark.specs import IngestSpec
+from tranquility_spark.streaming.arrow_frame import events_frame
 
 DEFAULT_MAX_BATCH_SIZE = 2000  # ref: Tranquilizer#DefaultMaxBatchSize
 
@@ -101,22 +103,11 @@ class Tranquilizer:
 
     def _flush(self, events: list, futures: list) -> None:
         idx_col = "__send_idx"
-        df = self.spark.createDataFrame(
-            [{**e, idx_col: i} for i, e in enumerate(events)]
-        )
-        ts_out = self.spec.timestamp_spec.output
-        parsed = df.withColumn(ts_out, self.spec.timestamp_spec.extract(df)).filter(
-            F.col(ts_out).isNotNull()
-        )
-        # ONE materialization of the real plan (r14 code-review: the old
-        # collect-then-write evaluated the lazy plan twice, and with a
-        # wall-clock window filter — F.current_timestamp() re-resolves per
-        # action — the write could drop boundary rows the disposition had
-        # already acknowledged as sent). Everything after this line
-        # operates on the <= max_batch_size collected rows.
-        parse_rows = parsed.collect()
-        parse_ok_idx = {r[idx_col] for r in parse_rows}
-        small = self.spark.createDataFrame(parse_rows, parsed.schema)
+        df = events_frame(self.spark, events, idx_col)
+        ts_spec = self.spec.timestamp_spec
+        ts = F.col(ts_spec.output)
+        parsed = df.withColumn(ts_spec.output, ts_spec.extract(df))
+        accepted = ts.isNotNull()
         if self.window_period is not None:
             # resolve 'now' driver-side exactly once per flush so the
             # disposition and the written rows see the SAME instant.
@@ -126,24 +117,21 @@ class Tranquilizer:
             # non-UTC host that would shift the window center by the UTC
             # offset and drop every current event (ADVICE r14, high).
             now = self.clock() if self.clock else _dt.datetime.now(_dt.timezone.utc)
-            small = two_sided_window_filter(
-                small, ts_out, self.window_period, now=now
-            )
-        accepted_rows = (
-            small.collect() if self.window_period is not None else parse_rows
-        )
-        accepted_idx = {r[idx_col] for r in accepted_rows}
-        batch_schema = parsed.drop(idx_col).schema
-        batch = self.spark.createDataFrame(
-            [
-                {k: v for k, v in r.asDict(recursive=False).items() if k != idx_col}
-                for r in accepted_rows
-            ],
-            schema=batch_schema,
-        )
+            accepted = accepted & window_condition(ts, self.window_period, now=now)
+        # The disposition and the write are two evaluations of ONE plan, and
+        # they agree row for row: the input is a local relation, 'now' is a
+        # literal, and every expression is deterministic (r14 code-review:
+        # with a current_timestamp() filter each action re-resolved the
+        # clock, so the write could drop boundary rows the disposition had
+        # already acknowledged as sent). Over a local relation this collect
+        # runs on the driver and launches no Spark job.
+        disposition = parsed.select(idx_col, ts.isNotNull(), accepted).collect()
+        parse_ok_idx = {i for i, ok, _ in disposition if ok}
+        accepted_idx = {i for i, _, acc in disposition if acc}
+        batch = parsed.filter(accepted).drop(idx_col)
 
         self._batch_id += 1
-        expected = len(accepted_rows)
+        expected = len(accepted_idx)
         if hasattr(self.beam, "write_batch"):
             written = self.beam.write_batch(batch, self._batch_id)
         else:
